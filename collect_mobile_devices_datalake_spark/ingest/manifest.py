@@ -5,7 +5,10 @@ AFTER the data insert (app.js:449-453) — two separate writes, so a crash
 between them leaves data visible without its checkpoint (or, for a
 reader racing the writer, a partially-visible file set). Lake formats
 close this with a transaction log; this module is the minimal version of
-that idea for a plain-parquet lake, with no extra packages:
+that idea for a plain-parquet lake, with no extra packages. With the
+data commit atomic, no second checkpoint table is needed at all: the
+committed ``src_url`` column of ``device_specs/<source>`` IS the resume
+checkpoint (ingest/pipeline.py ``committed_urls``).
 
 1. **Stage**: write the batch's parquet files with transaction-unique
    names. In-progress output lives under an ``_staging_<txn>`` directory
@@ -13,28 +16,33 @@ that idea for a plain-parquet lake, with no extra packages:
    even direct-directory readers never see half-written files), then the
    finished part files move into the table directory.
 2. **Publish**: write ONE manifest JSON listing every staged file across
-   every table touched by the transaction, to a temp name, then
-   ``os.replace`` it into ``<lake>/_manifests/`` — a single atomic
-   rename. Readers that list data files from committed manifests only
-   (`read_committed`) therefore see each transaction entirely or not at
-   all, across ALL its tables — the data append and its saved-list
-   checkpoint become one atomic unit.
+   every table touched by the transaction with `write_json_atomic` (tmp
+   file, fsync, ``os.replace`` into ``<lake>/_manifests/`` — a single
+   atomic rename). Readers that list data files from committed
+   manifests only (`read_committed`) therefore see each transaction
+   entirely or not at all, across ALL its tables (a batch's data and its
+   dead-letter rows).
 
 Crash semantics:
 - crash before publish → staged files are orphans; committed readers see
   the previous snapshot; a re-run re-ingests the batch under a new txn
-  (the resume anti-join reads the committed saved_list, so nothing was
-  checkpointed); ``vacuum_orphans`` reclaims the dead files.
+  (the resume anti-join reads the committed data, which does not hold
+  the batch); ``vacuum_orphans`` reclaims the dead files.
 - crash after publish → the transaction is fully visible; replay is a
   no-op (``committed`` gate on the txn id, plus the resume anti-join).
+
+`write_json_atomic` is the ONE atomic JSON commit of the package: the
+sum-lattice compaction manifest (streaming/lattice.py) commits through
+it too.
 
 Scale notes (100 TB): the protocol is the standard manifest-log shape
 (Iceberg/Delta reduced to its core). ``os.replace`` is atomic on POSIX
 filesystems (HDFS rename likewise); on S3-like object stores the publish
 step becomes a conditional PUT (If-None-Match) or a log-service CAS —
-the seam is `_publish`, one function. Manifests are O(files), read once
-per snapshot resolution and independent of data volume; compaction of
-old manifests is the same operation as `committed_files` + one rewrite.
+the seam is `write_json_atomic`, one function. Manifests are O(files),
+read once per snapshot resolution and independent of data volume;
+compaction of old manifests is the same operation as `committed_files`
++ one rewrite.
 """
 
 from __future__ import annotations
@@ -131,13 +139,24 @@ def publish(
     if removes:
         body["removes"] = removes
     final = os.path.join(root, f"{seq:010d}-{txn_id}.json")
-    tmp = os.path.join(root, f".tmp-{txn_id}.json")
+    write_json_atomic(final, body)
+    return final
+
+
+def write_json_atomic(path: str, body: dict) -> None:
+    """Commit ``body`` as the JSON file ``path``: write a tmp file, fsync
+    it, ``os.replace`` it over ``path`` — THE commit point, one atomic
+    rename, so a reader sees the previous file or the complete new one.
+    The tmp name is unique to each commit (concurrent committers never
+    share a staging file) and dot-prefixed + ``.tmp``-suffixed, so no
+    manifest or batch-dir listing ever picks it up."""
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.{uuid.uuid4().hex}.tmp")
     with open(tmp, "w") as f:
         json.dump(body, f)
         f.flush()
         os.fsync(f.fileno())
-    os.replace(tmp, final)  # THE commit point — one atomic rename
-    return final
+    os.replace(tmp, path)
 
 
 def snapshots(lake_dir: str) -> list[dict]:

@@ -2,7 +2,8 @@
 
 Reproduces the reference's EP2/EP3 write path (SURVEY §3) Spark-first:
 
-- ``crawl_resume`` (app.js:457-482)  → left_anti join on saved_list
+- ``crawl_resume`` (app.js:457-482)  → left_anti join on the committed
+  ``src_url`` column of ``device_specs/<source>`` (`committed_urls`)
 - per-source extract (app.js:539-753) → ``sources.parse.PARSERS``
 - normalize (to_key / merge / brand-model split, app.js:99-100, 579-582)
   → built-in expressions
@@ -10,23 +11,22 @@ Reproduces the reference's EP2/EP3 write path (SURVEY §3) Spark-first:
   append of the wide record; the open-ended payload is a
   ``specs map<string,string>`` column (SURVEY §1.2), so there is no
   ALTER-TABLE path and no 150-column sharding to emulate
-- ``saved_list`` checkpoint append (app.js:449) → committed in the SAME
-  manifest transaction as the data files (ingest/manifest.py), so the
-  reference's crash window — data visible without its checkpoint, or a
-  reader racing a half-written file set — cannot occur; delivery is
-  thereby exactly-once per committed transaction, and the keep-first
-  dedup in ``device_specs_view`` additionally repairs any replay of an
+- ``saved_list`` checkpoint append (app.js:449) → none: the data commit
+  is atomic (ingest/manifest.py), so the committed data table IS the
+  checkpoint. The reference's crash window — data visible without its
+  checkpoint — has no second write to open it; delivery is exactly-once
+  per committed transaction, and the keep-first dedup in
+  ``device_specs_view`` additionally repairs any replay of an
   UNcommitted batch (crash before publish → re-ingest under a new txn)
 
 Scale notes: appends are partitioned by ``source`` so per-source scans
-prune; the resume anti-join shuffles on the url key only (no payload);
-re-runs are incremental by construction; snapshot reads list data files
-from committed manifests only (orphans from crashed writers invisible).
+prune; the resume anti-join reads only the ``src_url`` column (parquet
+column pruning) and shuffles on the url key only (no payload); re-runs
+are incremental by construction; snapshot reads list data files from
+committed manifests only (orphans from crashed writers invisible).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -89,12 +89,19 @@ def read_logs(spark: SparkSession, lake_dir: str) -> DataFrame:
     )
 
 
-def _read_saved(spark: SparkSession, lake_dir: str, source: str) -> DataFrame:
+def committed_urls(spark: SparkSession, lake_dir: str, table: str) -> DataFrame:
+    """The resume checkpoint: the ``src_url`` of every committed record
+    of ``table`` (``device_specs/<source>``, or the stream's table).
+    Batch and stream ingest both resume against it — a url is done once
+    its record is committed, and a dead-lettered url never is."""
     from . import manifest
 
-    return manifest.read_committed(
-        spark, lake_dir, f"saved_list/{source}", schema="url string"
-    )
+    files = manifest.committed_files(lake_dir, table)
+    if not files:
+        # a JVM-side empty relation: an empty createDataFrame is a Python
+        # RDD whose tasks start a Python worker per core
+        return spark.range(0).select(F.lit(None).cast("string").alias("src_url"))
+    return spark.read.parquet(*files).select("src_url")
 
 
 def ingest_source(
@@ -106,15 +113,15 @@ def ingest_source(
     same pages is a no-op (resume anti-join), matching ``crawl_resume``.
     """
     ok = pages.filter(F.col("status") == 200)
-    saved = _read_saved(spark, lake_dir, source)
-    pending = resume_anti_join(ok.select(F.col("url")), saved)
+    done = committed_urls(spark, lake_dir, f"device_specs/{source}")
+    pending = resume_anti_join(ok.select("url"), done.withColumnRenamed("src_url", "url"))
     todo = ok.join(pending, "url", "left_semi")
 
     # Parse ONCE per batch: the fetch→parse pandas-UDF pipeline is the
-    # dominant batch cost, and four downstream actions consume it (count,
-    # data append, saved_list append, dead-letter probe+write). Persisting
-    # the parsed frame makes every consumer read the materialized batch
-    # instead of re-running the UDF — asserted by the accumulator test in
+    # dominant batch cost, and three downstream actions consume it (count,
+    # data append, dead-letter probe+write). Persisting the parsed frame
+    # makes every consumer read the materialized batch instead of
+    # re-running the UDF — asserted by the accumulator test in
     # tests/test_ingest.py. (At cluster scale the same effect comes from a
     # single staged write + observe() metrics; persist is the in-memory
     # equivalent for a batch that, post-resume-filter, is bounded by the
@@ -122,8 +129,9 @@ def ingest_source(
     parsed = PARSERS[source](todo).persist()
     try:
         # quarantine: parse failures (entries NULL, e.g. key/value length
-        # mismatch — app.js:626) are written to a dead-letter table and NOT
-        # checkpointed, so the next run retries them (reference behavior #43).
+        # mismatch — app.js:626) are written to a dead-letter table and
+        # never reach device_specs, so the next run retries them
+        # (reference behavior #43).
         good = parsed.filter(F.col("entries").isNotNull())
         bad = parsed.filter(F.col("entries").isNull()).select("url")
 
@@ -131,23 +139,17 @@ def ingest_source(
         try:
             n = records.count()
             _log(spark, lake_dir, source, "ingest_batch", n)
-            # ONE manifest transaction covers the data files, the
-            # saved_list checkpoint, and the dead-letter probe: either a
-            # reader sees all of this batch (data + checkpoint) or none
-            # of it — the atomicity the reference's two-phase
-            # insert-then-checkpoint (app.js:441-453) lacks. The data
-            # layout is unchanged: one subdirectory per source (records
-            # carry their own `source` column, so this is plain layout
-            # partitioning and per-source scans touch one directory).
+            # ONE manifest transaction covers the data files and the
+            # dead-letter rows: either a reader sees all of this batch or
+            # none of it, and the committed data is the resume checkpoint
+            # — the reference's two-phase insert-then-checkpoint
+            # (app.js:441-453) has no counterpart here. One subdirectory
+            # per source (records carry their own `source` column, so
+            # this is plain layout partitioning and per-source scans
+            # touch one directory).
             tables: list[tuple[str, DataFrame]] = []
             if n:
                 tables.append((f"device_specs/{source}", records))
-                tables.append(
-                    (
-                        f"saved_list/{source}",
-                        records.select(F.col("src_url").alias("url")),
-                    )
-                )
             if bad.limit(1).count():
                 tables.append((f"dead_letter/{source}", bad))
             if tables:

@@ -175,9 +175,10 @@ def _one_merge(syms: DataFrame):
 def _initial_symbol_arrays(types: DataFrame, wp: bool = False) -> DataFrame:
     """(word, freq, a): each word type's initial symbol sequence as an
     array — plain characters for BPE, '##'-marked word-internal
-    characters for WordPiece. Empty arrays (an empty-string word type,
-    possible on whitespace-only documents) are dropped, matching the
-    row form where ``posexplode`` emits no rows for them."""
+    characters for WordPiece. An empty-string word type (possible on
+    whitespace-only documents) is kept: ``split('', '')`` yields
+    ``['']`` here just as in the row form, so the ``size >= 1`` filter
+    is defensive only and drops nothing."""
     ch = F.split("word", "")
     if wp:
         a = F.transform(
@@ -225,7 +226,7 @@ def _greedy_merge_col(a, left: str, right: str, merged: str):
         hit = (
             (i < F.size(a))
             & (F.element_at(a, i) == F.lit(left))
-            & (F.element_at(a, i + 1) == F.lit(right))
+            & (F.try_element_at(a, i + 1) == F.lit(right))
         )
         return (
             F.when(

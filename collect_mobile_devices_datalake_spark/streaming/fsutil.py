@@ -75,107 +75,3 @@ def delete_dir(spark: SparkSession, dir_path: str) -> None:
     except Exception:
         pass
 
-
-# --- manifest store strategies (the sum-lattice commit seam) -----------------
-#
-# The non-idempotent sum lattice's compaction commits by ATOMICALLY
-# overwriting a small JSON manifest: readers must see either the prior
-# manifest or the new one, never a partial or absent file. Locally that
-# atomicity is os.replace; remote stores supply it through a registered
-# strategy instead of the old fail-fast (r12 verdict item 5). The
-# strategy object carries ONLY the manifest read/commit — partition data
-# keeps flowing through the Hadoop FileSystem API unchanged.
-
-
-def _stage_name(path: str) -> str:
-    """Commit-unique staging name: concurrent committers must never
-    share a tmp file, or one rename consumes the other's staging write
-    (the serialization test caught exactly this with a shared ``.tmp``).
-    Atomic overwrite at the target makes the race last-wins-intact."""
-    import os
-    import uuid
-
-    return f"{path}.{os.getpid()}.{uuid.uuid4().hex[:8]}.tmp"
-
-
-class LocalManifestStore:
-    """os.replace-based atomic manifest commit — same protocol previously
-    inlined in ``_compact_sum_state``, staged under a commit-unique tmp
-    name."""
-
-    def read(self, path: str) -> dict | None:
-        import json
-        import os
-
-        if not os.path.isfile(path):
-            return None
-        with open(path) as f:
-            return json.load(f)
-
-    def commit(self, path: str, manifest: dict) -> None:
-        import json
-        import os
-
-        tmp = _stage_name(path)
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, path)  # the commit point
-
-
-class RenameContractManifestStore:
-    """Manifest store for filesystems with an atomic rename-OVERWRITE
-    contract — HDFS ``FileContext.rename(src, dst, Options.Rename.
-    OVERWRITE)`` guarantees it; an object store exposing an atomic
-    conditional put (S3 if-none-match on a generation-numbered key, a
-    table row CAS) adapts to the same four calls. The adapter ``fs``
-    must provide::
-
-        exists(path) -> bool
-        read_text(path) -> str
-        write_text(path, data) -> None      # staging (tmp) writes only
-        rename_overwrite(src, dst) -> None  # the ATOMIC commit point
-
-    The strategy stages the full manifest next to the target and makes
-    it visible with one rename, so a reader concurrent with commit sees
-    the old manifest until the instant the new one is complete — the
-    exact crash-window guarantee the local os.replace protocol gives.
-    """
-
-    def __init__(self, fs: object) -> None:
-        self._fs = fs
-
-    def read(self, path: str) -> dict | None:
-        import json
-
-        if not self._fs.exists(path):
-            return None
-        return json.loads(self._fs.read_text(path))
-
-    def commit(self, path: str, manifest: dict) -> None:
-        import json
-
-        tmp = _stage_name(path)
-        self._fs.write_text(tmp, json.dumps(manifest))
-        self._fs.rename_overwrite(tmp, path)  # the commit point
-
-
-_MANIFEST_STORES: dict[str, object] = {}
-
-
-def register_manifest_store(scheme: str, store: object) -> None:
-    """Register a manifest store for a URI scheme (e.g. ``hdfs`` →
-    ``RenameContractManifestStore(FileContextAdapter(...))``). A cluster
-    deployment registers its store once at session setup; compaction on
-    that scheme's roots then commits through it."""
-    _MANIFEST_STORES[scheme] = store
-
-
-def manifest_store_for(path_str: str) -> object | None:
-    """Resolve the manifest store for a state root: local roots get the
-    os.replace store, remote roots the one registered for their scheme,
-    else None — readers treat None as 'no manifest can exist' (every
-    numeric batch dir live, sums exact) and compaction refuses."""
-    if is_local_root(path_str):
-        return LocalManifestStore()
-    scheme = path_str.split("://", 1)[0]
-    return _MANIFEST_STORES.get(scheme)

@@ -39,14 +39,17 @@ Protocol invariants, stated once:
   write and sweep leaves EXTRA partials whose re-absorption is a no-op.
   Producer re-delivery under a fresh batch id merges to the identical
   state — no anti-join needed.
-- **Sum families** (NOT idempotent) compact behind an atomic manifest
-  commit (``ManifestStore``): the fold is written to a fresh
+- **Sum families** (NOT idempotent) compact behind ONE local atomic
+  commit of ``compaction.json`` (``ingest.manifest.write_json_atomic``,
+  the lake's own manifest write): the fold is written to a fresh
   ``batch=c<gen>`` dir readers IGNORE until the manifest names it and
   marks the absorbed inputs dead — never a double count in any crash
-  window. Checkpoint replay is still exactly-once (partition
-  overwrite); wholesale producer re-delivery double-counts, the honest
-  semantics of any counting sketch (dedup upstream or use a G-set
-  family when that matters).
+  window. Remote roots refuse compaction up front (``os.replace``
+  overwrite-atomicity has no Hadoop ``FileSystem.rename`` equivalent);
+  their appends and reads work unchanged. Checkpoint replay is still
+  exactly-once (partition overwrite); wholesale producer re-delivery
+  double-counts, the honest semantics of any counting sketch (dedup
+  upstream or use a G-set family when that matters).
 
 A new family is a ``LatticeFamily`` declaration: name the checkpoint
 subdir, give the batch→partial projection and the fold, pick the
@@ -57,6 +60,7 @@ disk), crash-safe compaction, replay repair — is this module.
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -64,12 +68,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from .fsutil import (
-    delete_dir,
-    dir_has_parquet,
-    list_batch_dirs,
-    manifest_store_for,
-)
+from ..ingest.manifest import write_json_atomic
+from .fsutil import delete_dir, dir_has_parquet, is_local_root, list_batch_dirs
 
 _MANIFEST = "compaction.json"
 
@@ -108,26 +108,27 @@ def maintain_batch(family: LatticeFamily, state_dir: str):
     return fn
 
 
-def _sum_live_parts(
-    spark: SparkSession, state_dir: str, store: object | None = None
-) -> list[str]:
+def _read_compaction(state_dir: str) -> dict:
+    """The committed compaction manifest, ``{}`` when there is none. A
+    remote root never has one (compaction refuses there up front), so
+    its reads stay sound: every numeric dir is live and the sum exact."""
+    path = os.path.join(state_dir, _MANIFEST)
+    if not os.path.isfile(path):
+        return {}
+    with open(path) as f:
+        return json.load(f)
+
+
+def _sum_live_parts(spark: SparkSession, state_dir: str) -> list[str]:
     """Live partitions of a SUM family under the compaction-manifest
     rule: numeric ``batch=N`` dirs (stream-owned) are live unless the
     manifest lists them as absorbed; ``batch=c<gen>`` dirs
     (compaction-owned) are live ONLY when the manifest names them — an
     uncommitted compacted partition is invisible, which is what makes
-    the non-idempotent lattice crash-safe. On a root with NO registered
-    ManifestStore the read stays sound: no manifest can ever exist
-    (compaction refuses up front), so every numeric dir is live and the
-    sum is exact."""
-    absorbed: set[str] = set()
-    compacted: str | None = None
-    mpath = os.path.join(state_dir, _MANIFEST)
-    mstore = store if store is not None else manifest_store_for(state_dir)
-    m = mstore.read(mpath) if mstore is not None else None
-    if m is not None:
-        absorbed = set(m.get("absorbed", []))
-        compacted = m.get("compacted_dir")
+    the non-idempotent lattice crash-safe."""
+    m = _read_compaction(state_dir)
+    absorbed = set(m.get("absorbed", []))
+    compacted = m.get("compacted_dir")
     out = []
     for d in list_batch_dirs(spark, state_dir):
         if d in absorbed:
@@ -140,13 +141,10 @@ def _sum_live_parts(
 
 
 def live_parts(
-    spark: SparkSession,
-    family: LatticeFamily,
-    state_dir: str,
-    store: object | None = None,
+    spark: SparkSession, family: LatticeFamily, state_dir: str
 ) -> list[str]:
     if not family.idempotent:
-        return _sum_live_parts(spark, state_dir, store=store)
+        return _sum_live_parts(spark, state_dir)
     return [
         d
         for d in list_batch_dirs(spark, state_dir)
@@ -171,10 +169,7 @@ def read_state(
 
 
 def compact_state(
-    spark: SparkSession,
-    family: LatticeFamily,
-    state_dir: str,
-    store: object | None = None,
+    spark: SparkSession, family: LatticeFamily, state_dir: str
 ) -> None:
     """Fold the live partials into one partition/generation, under the
     family's lattice-class protocol (sweep or manifest — invariants in
@@ -205,24 +200,18 @@ def compact_state(
         return
 
     # SUM lattice: atomic manifest-committed generation swap
-    if store is None:
-        store = manifest_store_for(state_dir)
-    if store is None:
-        # no strategy can commit atomically on this root — refuse up
-        # front; un-compacted reads stay correct (every numeric batch
-        # dir remains live). A cluster deployment registers a
-        # store-specific atomic-put strategy (HDFS FileContext
-        # rename-OVERWRITE, a table row, S3 if-none-match) via
-        # fsutil.register_manifest_store(scheme, store).
+    if not is_local_root(state_dir):
+        # the commit point is os.replace overwrite-atomicity, which
+        # Hadoop FileSystem.rename does not give — refuse up front;
+        # un-compacted reads stay correct (every numeric batch dir
+        # remains live)
         raise NotImplementedError(
             f"sum-lattice compaction needs an atomic manifest swap; the "
-            f"local-FS os.replace protocol cannot commit on {state_dir!r} "
-            "and no manifest store is registered for its scheme "
-            "(fsutil.register_manifest_store). Streaming appends and reads "
-            "work unchanged on remote roots; compaction requires a "
-            "store-specific atomic-put strategy."
+            f"local-FS os.replace protocol cannot commit on {state_dir!r}. "
+            "Streaming appends and reads work unchanged on remote roots; "
+            "compaction requires a store-specific atomic-put strategy."
         )
-    live = _sum_live_parts(spark, state_dir, store=store)
+    live = _sum_live_parts(spark, state_dir)
     if len(live) <= 1:
         return
     # no materialization barrier: the merged fold is written to a FRESH
@@ -239,11 +228,9 @@ def compact_state(
     new_dir = f"batch=c{max(gens, default=-1) + 1}"
     merged.write.mode("overwrite").parquet(os.path.join(state_dir, new_dir))
 
-    mpath = os.path.join(state_dir, _MANIFEST)
-    prior = store.read(mpath)
-    prior_absorbed: list[str] = prior.get("absorbed", []) if prior else []
-    store.commit(  # the commit point (atomic-overwrite per the strategy)
-        mpath,
+    prior_absorbed = _read_compaction(state_dir).get("absorbed", [])
+    write_json_atomic(  # the commit point
+        os.path.join(state_dir, _MANIFEST),
         {
             "compacted_dir": new_dir,
             "absorbed": sorted(set(prior_absorbed) | set(live)),

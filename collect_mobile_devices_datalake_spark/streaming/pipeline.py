@@ -2,17 +2,19 @@
 
 This is ``crawl`` as a continuous pipeline (SURVEY §2.7): new page files
 landing in a directory are the frontier; each micro-batch parses,
-normalizes and MERGEs into the lake keyed on ``src_url``; the streaming
-checkpoint replaces the ``saved_list`` table — kill the query and
-restart with the same checkpoint dir and processing resumes exactly
-where it stopped (the semantics ``crawl_resume`` app.js:457-482
-approximates with at-least-once delivery; the checkpoint + idempotent
-upsert make it effectively-once).
+normalizes and MERGEs into the lake keyed on ``src_url``. The resume
+rule is the batch path's (``ingest.pipeline.committed_urls``): the
+committed ``src_url`` column of the data table is the checkpoint of
+record, so there is no ``saved_list`` table. The streaming checkpoint
+only tracks which page files were offered — kill the query and restart
+with the same checkpoint dir and processing resumes exactly where it
+stopped (the semantics ``crawl_resume`` app.js:457-482 approximates
+with at-least-once delivery; the checkpoint + idempotent upsert make it
+effectively-once).
 """
 
 from __future__ import annotations
 
-import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,20 +29,8 @@ EVENTS_SCHEMA = (
 PAGES_SCHEMA = "url string, source string, status int, html string"
 
 
-def _parquet_exists(path: str) -> bool:
-    """True when ``path`` holds at least one committed parquet part file.
-
-    Local-FS check is sufficient here (the lake root is a directory path);
-    on a cluster store the same gate is the catalog / _SUCCESS marker.
-    An empty directory (failed first write) counts as absent.
-    """
-    if not os.path.isdir(path):
-        return False
-    return any(n.endswith(".parquet") for n in os.listdir(path))
-
-
 def _upsert_batch(lake_dir: str, source: str) -> Callable[[DataFrame, int], None]:
-    from ..ingest.pipeline import normalize_records
+    from ..ingest.pipeline import committed_urls, normalize_records
     from ..sources.parse import PARSERS
 
     def fn(batch: DataFrame, batch_id: int) -> None:
@@ -63,12 +53,8 @@ def _upsert_batch(lake_dir: str, source: str) -> Callable[[DataFrame, int], None
         # Transient read failures (corrupt footer, IO error) must fail the
         # batch so the checkpoint retries it — a swallowed error here would
         # silently downgrade effectively-once to at-least-once.
-        files = manifest.committed_files(lake_dir, table)
-        if files:
-            existing = batch.sparkSession.read.parquet(*files).select("src_url")
-            fresh = records.join(existing, "src_url", "left_anti")
-        else:
-            fresh = records
+        existing = committed_urls(batch.sparkSession, lake_dir, table)
+        fresh = records.join(existing, "src_url", "left_anti")
         names = manifest.stage_write(fresh, lake_dir, table, txn)
         if names:
             manifest.publish(lake_dir, txn, {table: names})

@@ -176,10 +176,8 @@ def read_cms_state(spark: SparkSession, sketch_dir: str) -> DataFrame:
     return lattice.read_state(spark, _cms_family(), sketch_dir)
 
 
-def compact_cms_state(
-    spark: SparkSession, sketch_dir: str, store: object | None = None
-) -> None:
-    lattice.compact_state(spark, _cms_family(), sketch_dir, store=store)
+def compact_cms_state(spark: SparkSession, sketch_dir: str) -> None:
+    lattice.compact_state(spark, _cms_family(), sketch_dir)
 
 
 def start_cms_maintenance_stream(
@@ -229,10 +227,8 @@ def read_logbin_state(spark: SparkSession, sketch_dir: str) -> DataFrame:
     return lattice.read_state(spark, _logbin_family(), sketch_dir)
 
 
-def compact_logbin_state(
-    spark: SparkSession, sketch_dir: str, store: object | None = None
-) -> None:
-    lattice.compact_state(spark, _logbin_family(), sketch_dir, store=store)
+def compact_logbin_state(spark: SparkSession, sketch_dir: str) -> None:
+    lattice.compact_state(spark, _logbin_family(), sketch_dir)
 
 
 def start_logbin_maintenance_stream(

@@ -35,6 +35,8 @@ test, which forces c* > 0 and asserts the MG bound item-for-item.
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -149,18 +151,8 @@ def read_topk_state(spark: SparkSession, state_dir: str) -> DataFrame:
 def read_topk_counters(spark: SparkSession, state_dir: str) -> DataFrame:
     """The raw folded state (counter + marker rows) — for tests that
     assert the MG guarantee over EVERY counter, not just the top K_OUT."""
-    fam = _topk_family()
     return lattice.read_state(
-        spark,
-        LatticeFamily(
-            name=fam.name,
-            source_schema=fam.source_schema,
-            partial_fn=fam.partial_fn,
-            fold_fn=fam.fold_fn,
-            empty_schema=fam.empty_schema,
-            idempotent=fam.idempotent,
-        ),
-        state_dir,
+        spark, dataclasses.replace(_topk_family(), read_post=None), state_dir
     )
 
 

@@ -202,152 +202,3 @@ def test_compaction_fails_fast_on_remote_root(spark):
     for root in ("s3a://bucket/sketch", "hdfs://nn:8020/sketch"):
         with pytest.raises(NotImplementedError, match="atomic manifest swap"):
             compact_cms_state(spark, root)
-
-
-class _MockRenameFS:
-    """Mock filesystem adapter with an atomic rename-OVERWRITE contract
-    (the HDFS FileContext shape). Backed by real local files so Spark-
-    side readers see committed manifests; instruments the commit point
-    to prove (a) commits serialize and (b) readers never observe a
-    partial manifest."""
-
-    def __init__(self) -> None:
-        import threading
-
-        self._lock = threading.Lock()
-        self._in_critical = False
-        self.ops: list[tuple[str, str]] = []
-        self.overlap_detected = False
-
-    def exists(self, path: str) -> bool:
-        import os
-
-        return os.path.isfile(path)
-
-    def read_text(self, path: str) -> str:
-        with open(path) as f:
-            return f.read()
-
-    def write_text(self, path: str, data: str) -> None:
-        with open(path, "w") as f:
-            f.write(data)
-        self.ops.append(("write", path))
-
-    def rename_overwrite(self, src: str, dst: str) -> None:
-        import os
-        import time
-
-        with self._lock:  # the store's atomicity guarantee
-            if self._in_critical:
-                self.overlap_detected = True
-            self._in_critical = True
-            try:
-                time.sleep(0.002)  # widen the window so overlap WOULD show
-                os.replace(src, dst)
-                self.ops.append(("rename", dst))
-            finally:
-                self._in_critical = False
-
-
-def test_rename_contract_store_serializes_concurrent_commits(tmp_path):
-    """RenameContractManifestStore under concurrent committers: every
-    commit goes stage-then-rename, renames serialize through the store's
-    contract, the final manifest is one committer's payload intact, and
-    a concurrent reader only ever sees absent-or-complete manifests."""
-    import json
-    import threading
-
-    from collect_mobile_devices_datalake_spark.streaming.fsutil import (
-        RenameContractManifestStore,
-    )
-
-    fs = _MockRenameFS()
-    store = RenameContractManifestStore(fs)
-    mpath = str(tmp_path / "compaction.json")
-    payloads = [
-        {"compacted_dir": f"batch=c{i}", "absorbed": [f"batch={i}"]}
-        for i in range(8)
-    ]
-    seen: list[dict] = []
-    stop = threading.Event()
-
-    def reader() -> None:
-        while not stop.is_set():
-            m = store.read(mpath)  # must never raise on a partial file
-            if m is not None:
-                seen.append(m)
-
-    rt = threading.Thread(target=reader)
-    rt.start()
-    threads = [
-        threading.Thread(target=store.commit, args=(mpath, p)) for p in payloads
-    ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    stop.set()
-    rt.join()
-
-    assert not fs.overlap_detected  # commits serialized at the contract
-    final = store.read(mpath)
-    assert final in payloads  # one committer's payload, intact
-    assert all(m in payloads for m in seen)  # no torn reads
-    renames = [op for op in fs.ops if op[0] == "rename"]
-    assert len(renames) == len(payloads)  # every commit reached the point
-    # protocol shape: each payload staged to a tmp path, never to the
-    # manifest directly
-    assert all(p.endswith(".tmp") for op, p in fs.ops if op == "write")
-
-
-def test_compaction_through_injected_rename_contract_store(spark, tmp_path):
-    """The full sum-lattice compaction protocol driven end-to-end through
-    an injected RenameContractManifestStore (the remote-root strategy),
-    data dirs untouched: state identical before/after both compactions,
-    no double count across generations — byte-for-byte the local
-    protocol's guarantees via the strategy seam."""
-    from collect_mobile_devices_datalake_spark.streaming.fsutil import (
-        RenameContractManifestStore,
-    )
-    from collect_mobile_devices_datalake_spark.streaming.sketch_maintenance import (
-        _maintain_cms_batch,
-        compact_cms_state,
-        read_cms_state,
-    )
-
-    fs = _MockRenameFS()
-    store = RenameContractManifestStore(fs)
-    docs = load_table(spark, "documents", SF_SMOKE).select("doc_id", "text", "source")
-    sketch_dir = str(tmp_path / "sketch")
-    fn = _maintain_cms_batch(sketch_dir)
-    fn(docs.filter(F.col("doc_id") % 3 == 0), 0)
-    fn(docs.filter(F.col("doc_id") % 3 == 1), 1)
-    want = _state_map(read_cms_state(spark, sketch_dir))
-    compact_cms_state(spark, sketch_dir, store=store)
-    assert _state_map(read_cms_state(spark, sketch_dir)) == want
-    fn(docs.filter(F.col("doc_id") % 3 == 2), 2)
-    compact_cms_state(spark, sketch_dir, store=store)
-    assert _state_map(read_cms_state(spark, sketch_dir)) == _state_map(
-        cms_sketch(token_stream(docs))
-    )
-    # both commits went through the strategy's rename contract
-    assert sum(1 for op, _ in fs.ops if op == "rename") == 2
-
-
-def test_manifest_store_registry_resolution(tmp_path):
-    """manifest_store_for: local roots -> os.replace store; remote roots
-    -> the scheme's registered store; unregistered remote -> None (and
-    compaction refuses with the documented error)."""
-    from collect_mobile_devices_datalake_spark.streaming import fsutil
-
-    assert type(fsutil.manifest_store_for(str(tmp_path))).__name__ == (
-        "LocalManifestStore"
-    )
-    assert fsutil.manifest_store_for("s3a://bucket/sketch") is None
-    mock = fsutil.RenameContractManifestStore(_MockRenameFS())
-    fsutil.register_manifest_store("hdfs", mock)
-    try:
-        assert fsutil.manifest_store_for("hdfs://nn:8020/sketch") is mock
-        assert fsutil.manifest_store_for("s3a://bucket/sketch") is None
-    finally:
-        fsutil._MANIFEST_STORES.pop("hdfs", None)

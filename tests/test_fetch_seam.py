@@ -126,7 +126,7 @@ def test_http_fetch_ingest_e2e(spark, http_srv, lake):
     assert _Handler.hits >= 40  # the pages really crossed a socket
 
     # full ingest: 200-gate -> resume anti-join -> parse -> normalize ->
-    # one atomic manifest txn (data + saved_list)
+    # one atomic manifest txn (the data is the resume checkpoint)
     n1 = ingest_source(spark, pages, lake, "gsmarena")
     assert n1 == 38
     view = device_specs_view(spark, lake).filter(F.col("source") == "gsmarena")

@@ -96,10 +96,10 @@ def test_ingest_geekbench_ios_brand_override(spark, lake):
 
 
 def test_parse_runs_once_per_batch(spark, lake, monkeypatch):
-    """The parse pipeline must execute ONCE per ingest batch even though four
-    downstream actions consume it (count, data append, saved_list append,
-    dead-letter probe). An accumulator inside a pass-through mapInPandas stage
-    counts actual parse executions row-by-row."""
+    """The parse pipeline must execute ONCE per ingest batch even though three
+    downstream actions consume it (count, data append, dead-letter probe). An
+    accumulator inside a pass-through mapInPandas stage counts actual parse
+    executions row-by-row."""
     from collect_mobile_devices_datalake_spark.sources import parse as parse_mod
 
     acc = spark.sparkContext.accumulator(0)
@@ -128,6 +128,50 @@ def test_parse_runs_once_per_batch(spark, lake, monkeypatch):
     # no-op rerun: resume filter empties the batch, parse sees zero rows
     ingest_source(spark, pages, lake, "versus")
     assert acc.value == n_ok
+
+
+def test_geekbench_count_mismatch_is_dead_lettered_every_run(spark, lake):
+    """A geekbench page whose description and score counts differ fails
+    to parse (app.js:626): it lands in ``dead_letter/geekbench`` in the
+    same transaction as the batch's data, never reaches the view, and —
+    because the committed data is the resume checkpoint and it is not in
+    the data — is quarantined again on the next run."""
+    import json
+    from collections import Counter
+
+    from collect_mobile_devices_datalake_spark.ingest import manifest
+
+    part = load_table(spark, "part", SF).filter(F.col("p_partkey") < 60)
+    key = F.regexp_extract("url", r"p_(\d+)$", 1).cast("int")
+    pages = spec_pages(part, "geekbench").withColumn(
+        "html",
+        F.when(
+            key % 10 == 5,
+            F.concat("html", F.lit('<span class="description">Extra</span>')),
+        ).otherwise(F.col("html")),
+    )
+    ok = pages.filter(F.col("status") == 200)
+    bad = {r.url for r in ok.filter(key % 10 == 5).select("url").collect()}
+    n_ok = ok.count()
+    assert len(bad) == 6
+
+    assert ingest_source(spark, pages, lake, "geekbench") == n_ok - len(bad)
+    dead = manifest.read_committed(spark, lake, "dead_letter/geekbench")
+    assert sorted(r.url for r in dead.collect()) == sorted(bad)
+    bodies = [json.load(open(p)) for p in manifest.manifest_paths(lake)]
+    data_tables = [
+        set(b["tables"]) for b in bodies if "device_specs/geekbench" in b["tables"]
+    ]
+    assert data_tables == [{"device_specs/geekbench", "dead_letter/geekbench"}]
+
+    view = device_specs_view(spark, lake)
+    assert view.count() == n_ok - len(bad)
+    assert view.filter(F.col("src_url").isin(*bad)).count() == 0
+
+    # next run: nothing new to ingest, but the bad pages parse-fail again
+    assert ingest_source(spark, pages, lake, "geekbench") == 0
+    dead = manifest.read_committed(spark, lake, "dead_letter/geekbench")
+    assert Counter(r.url for r in dead.collect()) == {u: 2 for u in bad}
 
 
 def test_ingest_log_sink(spark, lake):

@@ -3,10 +3,11 @@
 The reference writes data, then the saved_list checkpoint, as two
 separate inserts (app.js:441-453) — a crash between them leaves data
 visible without its checkpoint. These tests pin the closed version:
-stage files → publish ONE manifest by atomic rename; committed readers
-see a transaction entirely or not at all, and a crash at ANY point
-between the data write and the manifest publish leaves the previous
-snapshot intact, with replay repairing the lake to exactly-once content.
+stage files → publish ONE manifest by atomic rename, and the committed
+data itself is the resume checkpoint; committed readers see a
+transaction entirely or not at all, and a crash at ANY point between
+the data write and the manifest publish leaves the previous snapshot
+intact, with replay repairing the lake to exactly-once content.
 """
 
 from __future__ import annotations
@@ -83,8 +84,9 @@ def manifest_file_count(lake: str, table: str) -> int:
 
 def test_ingest_crash_then_replay_repairs(spark, lake, monkeypatch):
     """ingest_source dies between staging and publish → nothing is
-    committed (data NOR saved_list, atomically), so the re-run re-ingests
-    the whole batch and the lake converges to exactly-once content."""
+    committed, and the committed data is the checkpoint, so the re-run
+    re-ingests the whole batch and the lake converges to exactly-once
+    content."""
     part = load_table(spark, "part", SF)
     pages = spec_pages(part, "gsmarena")
     n_ok = pages.filter(F.col("status") == 200).count()
@@ -103,16 +105,15 @@ def test_ingest_crash_then_replay_repairs(spark, lake, monkeypatch):
     with pytest.raises(OSError, match="injected crash"):
         ingest_source(spark, pages, lake, "gsmarena")
 
-    # atomicity: neither the data nor the checkpoint became visible
+    # atomicity: none of the batch's data became visible
     assert manifest.committed_files(lake, "device_specs") == []
-    assert manifest.committed_files(lake, "saved_list") == []
     with pytest.raises(FileNotFoundError):
         device_specs_view(spark, lake)
     # the staged data files exist on disk as orphans
     assert manifest.vacuum_orphans(lake, "device_specs/gsmarena")
 
-    # replay: resume anti-join sees an EMPTY committed saved_list, so the
-    # full batch re-ingests under a fresh txn
+    # replay: resume anti-join sees NO committed src_url, so the full
+    # batch re-ingests under a fresh txn
     monkeypatch.setattr(manifest, "publish", real_publish)
     n2 = ingest_source(spark, pages, lake, "gsmarena")
     assert n2 == n_ok
@@ -120,33 +121,90 @@ def test_ingest_crash_then_replay_repairs(spark, lake, monkeypatch):
     assert view.count() == n_ok
     assert view.select("src_url").distinct().count() == n_ok
 
-    # third run: checkpoint committed → no-op
+    # third run: data committed → no-op
     assert ingest_source(spark, pages, lake, "gsmarena") == 0
 
     # the crashed txn's orphans are reclaimable without touching live data
     manifest.vacuum_orphans(lake, "device_specs/gsmarena", remove=True)
-    manifest.vacuum_orphans(lake, "saved_list/gsmarena", remove=True)
     assert device_specs_view(spark, lake).count() == n_ok
 
 
 def test_ingest_data_and_checkpoint_commit_together(spark, lake):
-    """One manifest lists BOTH the data files and the saved_list files —
-    the two-phase window of the reference is structurally gone."""
+    """The batch commits in ONE manifest that lists only its data table
+    (plus ``dead_letter/<source>`` when rows fail to parse, pinned in
+    test_ingest.py) — there is no second checkpoint table, so the
+    two-phase window of the reference is structurally gone."""
     part = load_table(spark, "part", SF)
     pages = spec_pages(part, "gsmarena")
     ingest_source(spark, pages, lake, "gsmarena")
     import json
 
     # the telemetry log commits in its own txn; the DATA txn is the one
-    # whose manifest must list data + checkpoint together
+    # whose manifest lists the batch
     bodies = [json.load(open(p)) for p in manifest.manifest_paths(lake)]
     data_bodies = [
         b for b in bodies if any(t.startswith("device_specs") for t in b["tables"])
     ]
     assert len(data_bodies) == 1
-    tables = set(data_bodies[0]["tables"])
-    assert "device_specs/gsmarena" in tables
-    assert "saved_list/gsmarena" in tables
+    assert set(data_bodies[0]["tables"]) == {"device_specs/gsmarena"}
+
+
+def test_write_json_atomic_never_tears_under_concurrent_commits(tmp_path):
+    """The one atomic JSON commit (lake manifests and the sum-lattice
+    compaction manifest): concurrent committers each stage under their
+    own tmp name, the final file is one committer's payload intact, a
+    concurrent reader only ever sees absent-or-complete files, and no
+    staging file is left behind."""
+    import json
+    import sys
+    import threading
+
+    path = str(tmp_path / "compaction.json")
+    payloads = [
+        {"compacted_dir": f"batch=c{i}", "absorbed": [f"batch={j}" for j in range(2000)]}
+        for i in range(8)
+    ]
+    seen: list[str] = []
+    stop = threading.Event()
+
+    def reader() -> None:
+        while not stop.is_set():
+            if os.path.exists(path):
+                with open(path) as f:
+                    seen.append(f.read())
+
+    errors: list[OSError] = []
+
+    def commit(body: dict) -> None:
+        try:
+            manifest.write_json_atomic(path, body)
+        except OSError as e:  # a shared tmp name loses its file here
+            errors.append(e)
+
+    writers = [
+        threading.Thread(target=commit, args=(p,)) for p in payloads for _ in range(4)
+    ]
+    rt = threading.Thread(target=reader)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        rt.start()
+        for t in writers:
+            t.start()
+        for t in writers:
+            t.join(timeout=60)
+        stop.set()
+        rt.join(timeout=60)
+    finally:
+        stop.set()
+        sys.setswitchinterval(interval)
+    assert not rt.is_alive() and not any(t.is_alive() for t in writers)
+
+    assert errors == []  # every commit reached its rename
+    with open(path) as f:
+        assert json.load(f) in payloads  # one committer's payload, intact
+    assert all(json.loads(t) in payloads for t in seen)  # no torn reads
+    assert os.listdir(tmp_path) == ["compaction.json"]  # no staging leftovers
 
 
 def test_streaming_replay_of_committed_batch_is_noop(spark, lake):
