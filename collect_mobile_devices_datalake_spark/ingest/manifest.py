@@ -55,6 +55,8 @@ import uuid
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 MANIFEST_DIR = "_manifests"
 
@@ -245,8 +247,20 @@ def read_committed(
             raise FileNotFoundError(
                 f"no committed files under {table_prefix!r} and no schema given"
             )
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     return spark.read.parquet(*files)
+
+
+def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
+    """A zero-row frame of the DDL ``schema``, built as a JVM-side
+    relation: an empty ``spark.createDataFrame`` is a Python RDD whose
+    tasks start a Python worker per core."""
+    return spark.range(0).select(
+        *[
+            F.lit(None).cast(f.dataType).alias(f.name)
+            for f in DataType.fromDDL(schema).fields
+        ]
+    )
 
 
 def vacuum_orphans(

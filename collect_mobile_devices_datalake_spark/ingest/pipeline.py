@@ -96,12 +96,9 @@ def committed_urls(spark: SparkSession, lake_dir: str, table: str) -> DataFrame:
     its record is committed, and a dead-lettered url never is."""
     from . import manifest
 
-    files = manifest.committed_files(lake_dir, table)
-    if not files:
-        # a JVM-side empty relation: an empty createDataFrame is a Python
-        # RDD whose tasks start a Python worker per core
-        return spark.range(0).select(F.lit(None).cast("string").alias("src_url"))
-    return spark.read.parquet(*files).select("src_url")
+    return manifest.read_committed(
+        spark, lake_dir, table, schema="src_url string"
+    ).select("src_url")
 
 
 def ingest_source(

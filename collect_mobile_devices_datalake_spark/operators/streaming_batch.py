@@ -1164,9 +1164,9 @@ def _psamp_stream_oracle() -> str:
     "TakeOrderedAndProject inside the batch) in two availableNow runs "
     "against ONE checkpoint (the second run resumes over late-arriving "
     "files, certifying checkpoint recovery), the partials are folded by "
-    "the manifest-free idempotent compaction (k-extreme lattices share "
+    "the manifest-committed compaction (k-extreme lattices share "
     "the KMV guarantee: priorities are pure functions of the row, so "
-    "re-absorbed partials collapse in the doc_id dedup), and the state "
+    "re-delivered partials collapse in the doc_id dedup), and the state "
     "is read back and priced (rank, tau, unbiased mass estimates). The "
     "oracle is the one-shot batch priority_sample_topk SQL over the "
     "same corpus — equality proves per-batch bounded partials + a "
@@ -1563,7 +1563,7 @@ def q_watermark_lateness_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streaming/lattice.py's protocol extraction holds: the family is a "
     "~40-line declaration (streaming/profile_maintenance.py) — a one-"
     "row-per-source batch partial and a min/max fold — inheriting "
-    "replay repair, reading-is-merging, restart, and sweep compaction "
+    "replay repair, reading-is-merging, restart, and manifest compaction "
     "from the shared module. Documents are fed through the ACTUAL "
     "maintenance stream in two availableNow runs against ONE "
     "checkpoint, the state is compacted and read, and the folded "
@@ -1702,8 +1702,8 @@ def _lshindex_stream_oracle() -> str:
     "lake: each micro-batch of newly landed vectors writes its own "
     "bucket rows (8 per vector, a map-only projection — exactly what "
     "knn_lsh_incremental's delta shard holds), the merge is a DISTINCT "
-    "union (idempotent G-set: producer re-delivery is absorbed, "
-    "compaction is the sweep protocol), and the folded state IS the "
+    "union (idempotent G-set: producer re-delivery is absorbed), and "
+    "the folded state IS the "
     "persisted index the probes read — row-for-row equal to the batch "
     "bucket_index at the pinned plane count (re-planing = rebuild, "
     "scheduled out-of-band). Vectors flow through the ACTUAL "

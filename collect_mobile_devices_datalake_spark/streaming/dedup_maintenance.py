@@ -14,16 +14,16 @@ Delivery semantics mirror graph_maintenance.py exactly:
   own partition wholesale (repair, not freeze);
 - producer re-delivery (same docs as new files → new batch id) is
   dropped by the new_doc anti-join against PRIOR batch partitions.
+Both live in ``lattice.write_unseen``; the stream wiring is
+``lattice.start_batch_stream``.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from .fsutil import dir_has_parquet, list_batch_dirs
+from . import lattice
 
 DOCS_SCHEMA = "doc_id bigint, text string"
 
@@ -45,22 +45,8 @@ def _maintain_batch(matches_dir: str, sf_dir: str):
     """foreachBatch body, exposed for direct testing."""
 
     def fn(batch: DataFrame, batch_id: int) -> None:
-        spark_b = batch.sparkSession
-        matches = incremental_matches_for_batch(spark_b, sf_dir, batch)
-        others = [
-            os.path.join(matches_dir, d)
-            for d in list_batch_dirs(spark_b, matches_dir)
-            if d != f"batch={batch_id}"
-            and dir_has_parquet(spark_b, os.path.join(matches_dir, d))
-        ]
-        if others:
-            existing = spark_b.read.parquet(*others).select(
-                "new_doc"
-            ).distinct()
-            matches = matches.join(existing, "new_doc", "left_anti")
-        matches.write.mode("overwrite").parquet(
-            os.path.join(matches_dir, f"batch={batch_id}")
-        )
+        matches = incremental_matches_for_batch(batch.sparkSession, sf_dir, batch)
+        lattice.write_unseen(matches, matches_dir, batch_id, "new_doc")
 
     return fn
 
@@ -73,14 +59,7 @@ def start_dedup_maintenance_stream(
     checkpoint_dir: str,
     max_files_per_trigger: int = 10,
 ) -> StreamingQuery:
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_maintain_batch(matches_dir, sf_dir))
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "dedup_maint"))
-        .trigger(availableNow=True)
-        .start()
+    return lattice.start_batch_stream(
+        spark, DOCS_SCHEMA, docs_dir, _maintain_batch(matches_dir, sf_dir),
+        checkpoint_dir, "dedup", max_files_per_trigger,
     )

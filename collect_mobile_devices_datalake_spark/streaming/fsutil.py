@@ -55,7 +55,7 @@ def dir_has_parquet(spark: SparkSession, dir_path: str) -> bool:
 def is_local_root(path_str: str) -> bool:
     """True when ``path_str`` resolves to the driver's local filesystem
     (a bare path or an explicit ``file:`` scheme). Protocols whose commit
-    point is ``os.replace`` overwrite-atomicity (the sum-lattice
+    point is ``os.replace`` overwrite-atomicity (the lattice
     compaction manifest) must check this and fail fast on remote roots
     rather than corrupt state mid-protocol: Hadoop ``FileSystem.rename``
     does not overwrite, so the same manifest swap on HDFS/S3 would need a
@@ -67,8 +67,11 @@ def is_local_root(path_str: str) -> bool:
 
 
 def delete_dir(spark: SparkSession, dir_path: str) -> None:
-    """Recursive, best-effort delete (the compaction sweep: a leftover
-    partial is re-absorbed idempotently, so failure here is benign)."""
+    """Recursive, best-effort delete (compaction's GC step). A failed
+    delete is harmless: it runs after the compaction manifest has
+    committed, and the manifest already marks every input dead, so a
+    leftover partial is never read again — for any lattice, sums
+    included."""
     try:
         fs, hpath = _fs_for(spark, dir_path)
         fs.delete(hpath, True)

@@ -14,12 +14,10 @@ arrivals are per-batch edge computations.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from .fsutil import dir_has_parquet, list_batch_dirs
+from . import lattice
 
 VECTORS_SCHEMA = "vec_id bigint, embedding array<float>"
 
@@ -31,33 +29,10 @@ def _maintain_batch(graph_dir: str, sf_dir: str):
     from ..operators.similarity import nsw_edges_for_batch
 
     def fn(batch: DataFrame, batch_id: int) -> None:
-        spark_b = batch.sparkSession
-        edges = nsw_edges_for_batch(spark_b, sf_dir, batch)
-        # Idempotency is two separate mechanisms, matched to two failure
-        # modes:
-        # 1. CHECKPOINT REPLAY of a partially-committed batch: each batch
-        #    owns its partition dir and replay rewrites it WHOLESALE
-        #    (mode=overwrite) — a partial commit is repaired, never
-        #    frozen. The current batch's dir is therefore EXCLUDED from
-        #    the dedup guard below.
-        # 2. PRODUCER RE-DELIVERY (the same vectors land again as new
-        #    files → a new batch id): srcs already owned by a PRIOR
-        #    batch partition are dropped. The guard reads only the
-        #    pruned src column of prior partitions; at 100 TB it becomes
-        #    a bloom filter / processed-src side table (O(1) per probe)
-        #    instead of this scan.
-        others = [
-            os.path.join(graph_dir, d)
-            for d in list_batch_dirs(spark_b, graph_dir)
-            if d != f"batch={batch_id}"
-            and dir_has_parquet(spark_b, os.path.join(graph_dir, d))
-        ]
-        if others:
-            existing = spark_b.read.parquet(*others).select("src").distinct()
-            edges = edges.join(existing, "src", "left_anti")
-        edges.write.mode("overwrite").parquet(
-            os.path.join(graph_dir, f"batch={batch_id}")
-        )
+        edges = nsw_edges_for_batch(batch.sparkSession, sf_dir, batch)
+        # at 100 TB the src guard becomes a bloom filter / processed-src
+        # side table (O(1) per probe) instead of a scan of prior partitions
+        lattice.write_unseen(edges, graph_dir, batch_id, "src")
 
     return fn
 
@@ -70,14 +45,7 @@ def start_graph_maintenance_stream(
     checkpoint_dir: str,
     max_files_per_trigger: int = 10,
 ) -> StreamingQuery:
-    stream = (
-        spark.readStream.schema(VECTORS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(vectors_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(_maintain_batch(graph_dir, sf_dir))
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "graph_maint"))
-        .trigger(availableNow=True)
-        .start()
+    return lattice.start_batch_stream(
+        spark, VECTORS_SCHEMA, vectors_dir, _maintain_batch(graph_dir, sf_dir),
+        checkpoint_dir, "graph", max_files_per_trigger,
     )

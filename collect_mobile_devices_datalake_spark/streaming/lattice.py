@@ -4,20 +4,20 @@ batch-partition streaming family.
 Eleven certified families ride this module (r14 unification of what
 was previously copied across sketch/sample/survivorship maintenance):
 
-==============  =========================  ====================== =========
-family          merge                      lattice class          compaction
-==============  =========================  ====================== =========
-kmv / dau       k smallest hashes          idempotent G-set       sweep
-hll             per-register max           idempotent             sweep
-bloom           bitwise OR (packed words)  idempotent             sweep
-priority sample K+1 largest priorities     idempotent             sweep
-survivorship    argmax by okey (+ sum leg) idempotent (argmax)    sweep
-profile         per-source min/max         idempotent             sweep
-lsh index       distinct bucket rows       idempotent G-set       sweep
-cms             cell-wise sum              NOT idempotent         manifest
-logbin          cell-wise sum              NOT idempotent         manifest
-topk (MG)       counter sum + error sum    NOT idempotent         manifest
-==============  =========================  ====================== =========
+==============  =========================  ======================
+family          merge                      lattice class
+==============  =========================  ======================
+kmv / dau       k smallest hashes          idempotent G-set
+hll             per-register max           idempotent
+bloom           bitwise OR (packed words)  idempotent
+priority sample K+1 largest priorities     idempotent
+survivorship    argmax by okey (+ sum leg) idempotent (argmax)
+profile         per-source min/max         idempotent
+lsh index       distinct bucket rows       idempotent G-set
+cms             cell-wise sum              NOT idempotent
+logbin          cell-wise sum              NOT idempotent
+topk (MG)       counter sum + error sum    NOT idempotent
+==============  =========================  ======================
 
 (The rollup stream is NOT a member: its state is the engine's watermark
 store and its append-mode finalization + derived-grain manifest commits
@@ -32,30 +32,34 @@ Protocol invariants, stated once:
   independent of corpus size.
 - **Reading IS merging**: the current state is the family fold over
   every live partial; associativity + commutativity make fold order
-  (and, for idempotent families, duplicate absorption) irrelevant, so
-  a reader racing the writer sees some consistent prefix of batches.
-- **Idempotent families** compact with the sweep protocol: write the
-  fold to ``batch=compacted``, then delete the inputs. A crash between
-  write and sweep leaves EXTRA partials whose re-absorption is a no-op.
-  Producer re-delivery under a fresh batch id merges to the identical
-  state — no anti-join needed.
-- **Sum families** (NOT idempotent) compact behind ONE local atomic
-  commit of ``compaction.json`` (``ingest.manifest.write_json_atomic``,
-  the lake's own manifest write): the fold is written to a fresh
-  ``batch=c<gen>`` dir readers IGNORE until the manifest names it and
-  marks the absorbed inputs dead — never a double count in any crash
-  window. Remote roots refuse compaction up front (``os.replace``
+  irrelevant, so a reader racing the writer sees some consistent
+  prefix of batches.
+- **Compaction is ONE protocol for every family**: the fold is written
+  to a fresh ``batch=c<gen>`` dir that readers IGNORE until ONE local
+  atomic commit of ``compaction.json`` (``ingest.manifest.
+  write_json_atomic``, the lake's own manifest write) names it and
+  marks the absorbed inputs dead; only then are the inputs deleted. No
+  crash or failed delete can leave a partial counted twice — which
+  matters for every family with a SUM leg (cms, logbin, topk, and
+  survivorship's ``n_events``), and costs the idempotent ones one small
+  JSON write. Remote roots refuse compaction up front (``os.replace``
   overwrite-atomicity has no Hadoop ``FileSystem.rename`` equivalent);
-  their appends and reads work unchanged. Checkpoint replay is still
-  exactly-once (partition overwrite); wholesale producer re-delivery
-  double-counts, the honest semantics of any counting sketch (dedup
-  upstream or use a G-set family when that matters).
+  their appends and reads work unchanged.
+- **The lattice class decides re-delivery, not the code path**:
+  checkpoint replay is exactly-once for every family (partition
+  overwrite). Producer re-delivery under a fresh batch id merges to the
+  identical state for idempotent families — no anti-join needed — and
+  double-counts for sum families, the honest semantics of any counting
+  sketch (dedup upstream or use a G-set family when that matters).
 
 A new family is a ``LatticeFamily`` declaration: name the checkpoint
-subdir, give the batch→partial projection and the fold, pick the
-lattice class. Everything else — stream wiring, live-partition
-enumeration (Hadoop FileSystem API, so HDFS/S3 roots behave like local
-disk), crash-safe compaction, replay repair — is this module.
+subdir, give the batch→partial projection and the fold. Everything
+else — stream wiring, live-partition enumeration (Hadoop FileSystem
+API, so HDFS/S3 roots behave like local disk), crash-safe compaction,
+replay repair — is this module. Streams whose per-batch output is not
+a lattice partial (dedup decisions, graph edges) still share the
+wiring (``start_batch_stream``) and the re-delivery guard
+(``write_unseen``).
 """
 
 from __future__ import annotations
@@ -68,7 +72,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..ingest.manifest import write_json_atomic
+from ..ingest.manifest import empty_frame, write_json_atomic
 from .fsutil import delete_dir, dir_has_parquet, is_local_root, list_batch_dirs
 
 _MANIFEST = "compaction.json"
@@ -83,15 +87,13 @@ class LatticeFamily:
     (the compaction fold). ``read_fold_fn`` overrides the fold on the
     READ path only — survivorship drops its okey merge column from the
     surfaced state but must keep it through compaction; ``read_post``
-    appends derived columns after either fold (logbin's lower bound).
-    ``idempotent`` picks the compaction protocol (sweep vs manifest)."""
+    appends derived columns after either fold (logbin's lower bound)."""
 
     name: str  # checkpoint subdir, e.g. "kmv" -> <ckpt>/kmv_maint
     source_schema: str
     partial_fn: Callable[[DataFrame], DataFrame]
     fold_fn: Callable[[DataFrame], DataFrame]
     empty_schema: str
-    idempotent: bool = True
     read_fold_fn: Callable[[DataFrame], DataFrame] | None = None
     read_post: Callable[[DataFrame], DataFrame] | None = None
 
@@ -108,10 +110,31 @@ def maintain_batch(family: LatticeFamily, state_dir: str):
     return fn
 
 
+def write_unseen(out: DataFrame, state_dir: str, batch_id: int, key: str) -> None:
+    """foreachBatch write for streams whose rows are owned by a ``key``
+    (dedup decisions, graph edges): drop the rows whose ``key`` a PRIOR
+    live partition already holds, then overwrite ``batch=<batch_id>``.
+
+    Two mechanisms for two failure modes: checkpoint replay of a
+    partially committed batch rewrites its own partition wholesale (so
+    that partition is excluded from the guard — repair, not freeze);
+    producer re-delivery under a fresh batch id is dropped by the
+    anti-join, which reads only the pruned ``key`` column."""
+    spark = out.sparkSession
+    own = f"batch={batch_id}"
+    others = [
+        os.path.join(state_dir, d) for d in live_parts(spark, state_dir) if d != own
+    ]
+    if others:
+        seen = spark.read.parquet(*others).select(key).distinct()
+        out = out.join(seen, key, "left_anti")
+    out.write.mode("overwrite").parquet(os.path.join(state_dir, own))
+
+
 def _read_compaction(state_dir: str) -> dict:
     """The committed compaction manifest, ``{}`` when there is none. A
     remote root never has one (compaction refuses there up front), so
-    its reads stay sound: every numeric dir is live and the sum exact."""
+    its reads stay sound: every numeric dir is live."""
     path = os.path.join(state_dir, _MANIFEST)
     if not os.path.isfile(path):
         return {}
@@ -119,13 +142,12 @@ def _read_compaction(state_dir: str) -> dict:
         return json.load(f)
 
 
-def _sum_live_parts(spark: SparkSession, state_dir: str) -> list[str]:
-    """Live partitions of a SUM family under the compaction-manifest
-    rule: numeric ``batch=N`` dirs (stream-owned) are live unless the
-    manifest lists them as absorbed; ``batch=c<gen>`` dirs
-    (compaction-owned) are live ONLY when the manifest names them — an
-    uncommitted compacted partition is invisible, which is what makes
-    the non-idempotent lattice crash-safe."""
+def live_parts(spark: SparkSession, state_dir: str) -> list[str]:
+    """Live partitions under the compaction-manifest rule: numeric
+    ``batch=N`` dirs (stream-owned) are live unless the manifest lists
+    them as absorbed; ``batch=c<gen>`` dirs (compaction-owned) are live
+    ONLY when the manifest names them — an uncommitted compacted
+    partition is invisible, so no crash window counts a partial twice."""
     m = _read_compaction(state_dir)
     absorbed = set(m.get("absorbed", []))
     compacted = m.get("compacted_dir")
@@ -140,28 +162,14 @@ def _sum_live_parts(spark: SparkSession, state_dir: str) -> list[str]:
     return out
 
 
-def live_parts(
-    spark: SparkSession, family: LatticeFamily, state_dir: str
-) -> list[str]:
-    if not family.idempotent:
-        return _sum_live_parts(spark, state_dir)
-    return [
-        d
-        for d in list_batch_dirs(spark, state_dir)
-        if dir_has_parquet(spark, os.path.join(state_dir, d))
-    ]
-
-
 def read_state(
     spark: SparkSession, family: LatticeFamily, state_dir: str
 ) -> DataFrame:
     """The current state: the family fold over every live partial.
     Reading IS merging — see the module invariants."""
-    parts = [
-        os.path.join(state_dir, d) for d in live_parts(spark, family, state_dir)
-    ]
+    parts = [os.path.join(state_dir, d) for d in live_parts(spark, state_dir)]
     if not parts:
-        out = spark.createDataFrame([], family.empty_schema)
+        out = empty_frame(spark, family.empty_schema)
     else:
         fold = family.read_fold_fn or family.fold_fn
         out = fold(spark.read.parquet(*parts))
@@ -171,47 +179,21 @@ def read_state(
 def compact_state(
     spark: SparkSession, family: LatticeFamily, state_dir: str
 ) -> None:
-    """Fold the live partials into one partition/generation, under the
-    family's lattice-class protocol (sweep or manifest — invariants in
-    the module docstring)."""
-    if family.idempotent:
-        olds = list_batch_dirs(spark, state_dir)
-        if not olds or olds == ["batch=compacted"]:
-            return
-        inputs = [  # a crash can strand a parquet-less dir; fold the rest
-            d for d in olds if dir_has_parquet(spark, os.path.join(state_dir, d))
-        ]
-        if not inputs:
-            return
-        merged = family.fold_fn(
-            spark.read.parquet(*[os.path.join(state_dir, d) for d in inputs])
-        )
-        if "batch=compacted" in olds:
-            # re-compaction overwrites a dir the fold still reads — only
-            # then is a materialization barrier needed; a first compaction
-            # writes a fresh dir disjoint from every input
-            merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "batch=compacted")
-        )
-        for d in olds:
-            if d != "batch=compacted":
-                delete_dir(spark, os.path.join(state_dir, d))
-        return
-
-    # SUM lattice: atomic manifest-committed generation swap
+    """Fold the live partials into one fresh generation behind one
+    atomic manifest commit, then GC the inputs (invariants in the module
+    docstring)."""
     if not is_local_root(state_dir):
         # the commit point is os.replace overwrite-atomicity, which
         # Hadoop FileSystem.rename does not give — refuse up front;
         # un-compacted reads stay correct (every numeric batch dir
         # remains live)
         raise NotImplementedError(
-            f"sum-lattice compaction needs an atomic manifest swap; the "
+            f"lattice compaction needs an atomic manifest swap; the "
             f"local-FS os.replace protocol cannot commit on {state_dir!r}. "
             "Streaming appends and reads work unchanged on remote roots; "
             "compaction requires a store-specific atomic-put strategy."
         )
-    live = _sum_live_parts(spark, state_dir)
+    live = live_parts(spark, state_dir)
     if len(live) <= 1:
         return
     # no materialization barrier: the merged fold is written to a FRESH
@@ -236,8 +218,32 @@ def compact_state(
             "absorbed": sorted(set(prior_absorbed) | set(live)),
         },
     )
-    for d in live:  # GC; crash-safe (manifest already excludes them)
+    for d in live:  # GC; harmless if it fails (the manifest excludes them)
         delete_dir(spark, os.path.join(state_dir, d))
+
+
+def start_batch_stream(
+    spark: SparkSession,
+    schema: str,
+    source_dir: str,
+    fn: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    name: str,
+    max_files_per_trigger: int = 10,
+) -> StreamingQuery:
+    """File-source availableNow stream → ``fn`` as its foreachBatch,
+    checkpointed under ``<checkpoint_dir>/<name>_maint``."""
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(source_dir)
+    )
+    return (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", os.path.join(checkpoint_dir, f"{name}_maint"))
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def start_maintenance_stream(
@@ -249,16 +255,8 @@ def start_maintenance_stream(
     max_files_per_trigger: int = 10,
 ) -> StreamingQuery:
     """File-source availableNow stream → bounded-partial foreachBatch."""
-    stream = (
-        spark.readStream.schema(family.source_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(maintain_batch(family, state_dir))
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, f"{family.name}_maint")
-        )
-        .trigger(availableNow=True)
-        .start()
+    return start_batch_stream(
+        spark, family.source_schema, source_dir,
+        maintain_batch(family, state_dir), checkpoint_dir, family.name,
+        max_files_per_trigger,
     )

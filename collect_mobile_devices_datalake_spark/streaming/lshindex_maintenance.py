@@ -10,7 +10,7 @@ rows (vec_id, t, bucket) — exactly the relation ``bucket_index`` builds
 batch-side — and the folded state is, row for row, the full index.
 Bucket rows are facts about individual vectors, so the merge is a
 DISTINCT union: an idempotent G-set (the KMV class), which makes
-producer re-delivery a no-op and compaction the sweep protocol.
+producer re-delivery a no-op.
 
 The hyperplane count is PINNED (``STREAM_PLANES`` = the
 planes_for_count floor): a stream cannot know the final corpus size,

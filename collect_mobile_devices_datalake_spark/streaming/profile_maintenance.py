@@ -8,9 +8,8 @@ registered driver key) that a new family is just a declaration — a
 bounded batch→partial projection (one row per source per batch), a
 min/max fold, and the idempotent lattice class. MIN and MAX are
 join-semilattice operations, so re-delivered partials are absorbed
-with no anti-join and compaction is the sweep protocol; every protocol
-property (replay repair, reading-is-merging, crash-safe compaction) is
-inherited, not re-implemented.
+with no anti-join; every protocol property (replay repair, reading-is-
+merging, crash-safe compaction) is inherited, not re-implemented.
 
 At 100 TB this is the profile an ingest keeps live to answer "what id
 range / document sizes has source X shipped so far?" without scanning

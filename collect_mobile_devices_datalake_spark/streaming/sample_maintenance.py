@@ -9,7 +9,7 @@ A document's priority q = (w * M) div u is a pure function of
 keep the K+1 largest (priority desc, doc_id asc) — is associative,
 commutative, AND idempotent: a re-delivered partial collapses in the
 dedup and cannot move the sample (the KMV guarantee, not the CMS
-caveat; compaction is the idempotent sweep).
+caveat).
 
 Correctness of the bounded per-batch partial: priorities are fixed per
 document, so any document in the GLOBAL top-(K+1) ranks at least as
@@ -81,7 +81,8 @@ def read_sample_state(spark: SparkSession, state_dir: str) -> DataFrame:
 
 
 def compact_sample_state(spark: SparkSession, state_dir: str) -> None:
-    """Fold all partials into one K+1-row partition (idempotent sweep)."""
+    """Fold all live partials into one K+1-row generation (the
+    lattice's manifest-committed compaction)."""
     lattice.compact_state(spark, _sample_family(), state_dir)
 
 

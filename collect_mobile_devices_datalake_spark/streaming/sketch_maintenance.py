@@ -5,8 +5,8 @@ declared over the shared batch-partition protocol in ``lattice.py``.
 
 Each family is a ``LatticeFamily``: a bounded batch→partial projection
 plus the merge fold; the protocol module owns stream wiring, reading-
-is-merging, and the lattice-class-correct compaction (idempotent sweep
-for KMV/HLL/Bloom, atomic manifest commit for the CMS/logbin sums).
+is-merging, and the one compaction protocol (an atomic manifest commit,
+the same for the idempotent KMV/HLL/Bloom and the CMS/logbin sums).
 Protocol invariants and delivery semantics are documented ONCE, on
 ``streaming/lattice.py``; per-family notes below are only what is
 specific to the family:
@@ -161,7 +161,6 @@ def _cms_family(depth: int = DEPTH, width: int = WIDTH) -> LatticeFamily:
         partial_fn=lambda b: cms_sketch(token_stream(b), depth, width),
         fold_fn=lambda u: u.groupBy("row_j", "cell").agg(F.sum("cnt").alias("cnt")),
         empty_schema="row_j int, cell bigint, cnt bigint",
-        idempotent=False,
     )
 
 
@@ -210,7 +209,6 @@ def _logbin_family() -> LatticeFamily:
         partial_fn=_logbin_partial,
         fold_fn=lambda u: u.groupBy(*_LOGBIN_KEYS).agg(F.sum("cnt").alias("cnt")),
         empty_schema=_LOGBIN_EMPTY,
-        idempotent=False,
         read_post=lambda df: df.withColumn("lower", F.col("bkey") * F.col("width")),
     )
 

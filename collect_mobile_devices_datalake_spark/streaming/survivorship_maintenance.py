@@ -8,9 +8,10 @@ recency, then event_id — operators/advanced.py::survivorship_keyed) is
 associative, commutative, AND idempotent: re-merging a batch partial
 that was already absorbed cannot move any user's golden record, so
 producer re-delivery under a fresh batch id is harmless for every
-argmax/max column — the KMV delivery guarantee, compacted by the
-idempotent sweep. The one non-idempotent leg, ``n_events`` (a SUM),
-inherits the CMS caveat instead: checkpoint replay repairs in place (a
+argmax/max column — the KMV delivery guarantee. The one non-idempotent
+leg, ``n_events`` (a SUM), inherits the CMS caveat instead, and is why
+compaction must never leave an absorbed partial live (the lattice's
+manifest commit guarantees it): checkpoint replay repairs in place (a
 batch id overwrites its own partition wholesale), wholesale re-delivery
 double-counts it. The tests pin both behaviors separately — the split
 is the point: a deployment that needs exact counts under re-delivery
@@ -93,9 +94,9 @@ def read_survivorship_state(spark: SparkSession, state_dir: str) -> DataFrame:
 
 
 def compact_survivorship_state(spark: SparkSession, state_dir: str) -> None:
-    """Fold all partials into one partition, keeping okey per user
-    (idempotent sweep for the argmax legs; n_events carries the
-    documented sum caveat)."""
+    """Fold all live partials into one generation, keeping okey per
+    user; the manifest commit keeps n_events exact even when deleting
+    the absorbed partials fails."""
     lattice.compact_state(spark, _surv_family(), state_dir)
 
 

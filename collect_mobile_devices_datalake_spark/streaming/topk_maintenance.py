@@ -138,7 +138,6 @@ def _topk_family() -> LatticeFamily:
         partial_fn=topk_partial,
         fold_fn=topk_fold,
         empty_schema=_STATE_SCHEMA,
-        idempotent=False,  # counters SUM: manifest-committed compaction
         read_post=topk_read_post,
     )
 

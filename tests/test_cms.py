@@ -188,17 +188,19 @@ def test_dyadic_width_fold_identity(spark):
 
 
 def test_compaction_fails_fast_on_remote_root(spark):
-    """The sum-lattice manifest commits via os.replace overwrite-atomicity,
+    """The lattice manifest commits via os.replace overwrite-atomicity,
     which has no Hadoop-FS equivalent — a remote state root must refuse
-    compaction UP FRONT (r12 advice closure), never die mid-protocol.
-    Reads/appends stay correct un-compacted (no manifest -> every numeric
-    batch dir live)."""
+    compaction UP FRONT (r12 advice closure), never die mid-protocol,
+    for sum and idempotent families alike. Reads/appends stay correct
+    un-compacted (no manifest -> every numeric batch dir live)."""
     import pytest
 
     from collect_mobile_devices_datalake_spark.streaming.sketch_maintenance import (
         compact_cms_state,
+        compact_hll_state,
     )
 
-    for root in ("s3a://bucket/sketch", "hdfs://nn:8020/sketch"):
-        with pytest.raises(NotImplementedError, match="atomic manifest swap"):
-            compact_cms_state(spark, root)
+    for compact in (compact_cms_state, compact_hll_state):
+        for root in ("s3a://bucket/sketch", "hdfs://nn:8020/sketch"):
+            with pytest.raises(NotImplementedError, match="atomic manifest swap"):
+                compact(spark, root)

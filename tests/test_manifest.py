@@ -372,3 +372,29 @@ def test_clustered_rewrite_produces_pruned_ranges(spark, lake):
         assert hi1 <= lo2  # contiguous, non-overlapping
     got = manifest.read_committed(spark, lake, "t")
     assert got.count() == 1000 and got.select(F.sum("v")).first()[0] == 499500
+
+
+def test_empty_reads_are_jvm_side_relations(spark, lake):
+    """The empty result of every committed-state read is a JVM-side
+    relation, never a Python RDD: a ``createDataFrame([])`` scan starts
+    a Python worker per core the first time it is read."""
+    from collect_mobile_devices_datalake_spark.ingest.pipeline import committed_urls
+    from collect_mobile_devices_datalake_spark.streaming.survivorship_maintenance import (
+        read_survivorship_state,
+    )
+
+    empties = [
+        manifest.read_committed(
+            spark, lake, "t", schema="url string, tags array<bigint>, ts timestamp"
+        ),
+        committed_urls(spark, lake, "device_specs/gsmarena"),
+        read_survivorship_state(spark, os.path.join(lake, "surv")),
+    ]
+    for df in empties:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+        assert df.count() == 0
+    assert empties[0].schema.simpleString() == (
+        "struct<url:string,tags:array<bigint>,ts:timestamp>"
+    )
+    assert empties[1].columns == ["src_url"]

@@ -15,6 +15,7 @@ from collect_mobile_devices_datalake_spark.operators.sketches import (
     _source_token_hashes,
     kmv_sketches,
 )
+from collect_mobile_devices_datalake_spark.streaming import lattice
 
 from .conftest import SF_SMOKE
 
@@ -110,11 +111,11 @@ def test_sketch_maintenance_stream_matches_batch(spark, tmp_path):
     } == want
     assert len([d for d in os.listdir(sketch_dir) if d.startswith("batch=")]) >= 3
 
-    # compaction folds the partials into one partition, state unchanged
+    # compaction folds the partials into one committed generation, the
+    # absorbed inputs are GC'd, state unchanged
     compact_kmv_state(spark, sketch_dir)
-    assert [d for d in os.listdir(sketch_dir) if d.startswith("batch=")] == [
-        "batch=compacted"
-    ]
+    parts = [d for d in os.listdir(sketch_dir) if d.startswith("batch=")]
+    assert parts == ["batch=c0"] == lattice.live_parts(spark, sketch_dir)
     assert {
         r["source"]: tuple(r["kmin"])
         for r in read_kmv_state(spark, sketch_dir).collect()
@@ -509,12 +510,19 @@ def test_hll_maintenance_stream_matches_batch(spark, tmp_path):
     assert state_map() == want
     assert len([d for d in os.listdir(sketch_dir) if d.startswith("batch=")]) >= 3
 
-    # compaction folds to one partition, state unchanged; a partial-
-    # commit replay (clobber + rerun of the same batch id) repairs it
+    # crash window: a compacted generation WITHOUT a manifest commit is
+    # invisible — a hand-written c-dir whose registers would raise every
+    # max leaves the state unchanged
+    hll_registers(_source_token_hashes(spark, SF_SMOKE)).withColumn(
+        "mrho", F.col("mrho") + 1
+    ).write.mode("overwrite").parquet(os.path.join(sketch_dir, "batch=c99"))
+    assert state_map() == want
+
+    # compaction folds to one committed generation (the orphan c99 stays
+    # invisible and superseded), state unchanged; a partial-commit
+    # replay (clobber + rerun of the same batch id) repairs it
     compact_hll_state(spark, sketch_dir)
-    assert [d for d in os.listdir(sketch_dir) if d.startswith("batch=")] == [
-        "batch=compacted"
-    ]
+    assert lattice.live_parts(spark, sketch_dir) == ["batch=c100"]
     assert state_map() == want
     fn = _maintain_hll_batch(sketch_dir)
     fn(docs.filter(F.col("doc_id") % 3 == 0), 99)
@@ -624,12 +632,12 @@ def test_bloom_maintenance_stream_matches_batch(spark, tmp_path):
     assert state_map() == want
     assert len([d for d in os.listdir(sketch_dir) if d.startswith("batch=")]) >= 3
 
-    # compaction folds to one partition, state unchanged; a partial-
-    # commit replay (clobber + rerun of the same batch id) repairs it
+    # compaction folds to one committed generation, state unchanged; a
+    # partial-commit replay (clobber + rerun of the same batch id)
+    # repairs it
     compact_bloom_state(spark, sketch_dir)
-    assert [d for d in os.listdir(sketch_dir) if d.startswith("batch=")] == [
-        "batch=compacted"
-    ]
+    parts = [d for d in os.listdir(sketch_dir) if d.startswith("batch=")]
+    assert parts == ["batch=c0"] == lattice.live_parts(spark, sketch_dir)
     assert state_map() == want
     fn = _maintain_bloom_batch(sketch_dir)
     fn(orders.filter(F.col("o_orderkey") % 3 == 0), 99)

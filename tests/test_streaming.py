@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from collect_mobile_devices_datalake_spark.session import load_table
 from collect_mobile_devices_datalake_spark.sources.fixtures import spec_pages
+from collect_mobile_devices_datalake_spark.streaming import lattice
 from collect_mobile_devices_datalake_spark.streaming.pipeline import (
     EVENTS_SCHEMA,
     start_ingest_stream,
@@ -973,14 +974,50 @@ def test_survivorship_stream_matches_batch_and_redelivery(spark, tmp):
         u: want_counts[u] + dup.get(u, 0) for u in want_counts
     }
 
-    # compaction folds to one partition; state (incl. the double-count)
-    # is preserved exactly
+    # compaction folds to one committed generation; state (incl. the
+    # double-count) is preserved exactly
     before_gold, before_counts = gold(got), counts(got)
     compact_survivorship_state(spark, st_dir)
     got = read_survivorship_state(spark, st_dir)
     assert gold(got) == before_gold and counts(got) == before_counts
     parts = [d for d in os.listdir(st_dir) if d.startswith("batch=")]
-    assert parts == ["batch=compacted"]
+    assert parts == ["batch=c0"] == lattice.live_parts(spark, st_dir)
+
+
+def test_survivorship_compaction_with_failed_gc_keeps_counts(spark, tmp, monkeypatch):
+    """A compaction whose GC deletes nothing (``delete_dir`` swallows
+    every error) must not leave the absorbed partials live next to the
+    compacted generation: ``n_events`` is a SUM, so re-reading them
+    would double-count. The manifest marks them dead before GC runs."""
+    from collect_mobile_devices_datalake_spark.streaming.survivorship_maintenance import (
+        _maintain_surv_batch,
+        compact_survivorship_state,
+        read_survivorship_state,
+    )
+
+    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
+    events = load_table(spark, "events", SF).select(*cols)
+    st_dir = os.path.join(tmp, "surv")
+    fn = _maintain_surv_batch(st_dir)
+    fn(events.filter(F.col("event_id") % 2 == 0), 0)
+    fn(events.filter(F.col("event_id") % 2 == 1), 1)
+
+    def snap():
+        return {
+            r.user_id: (
+                r.golden_k, r.golden_event_id, r.golden_type, r.last_ts, r.n_events
+            )
+            for r in read_survivorship_state(spark, st_dir).collect()
+        }
+
+    before = snap()
+    assert sum(v[-1] for v in before.values()) == events.count()
+
+    monkeypatch.setattr(lattice, "delete_dir", lambda spark, path: None)
+    compact_survivorship_state(spark, st_dir)
+    # the failed GC left both inputs on disk; neither is read again
+    assert {"batch=0", "batch=1"} <= set(os.listdir(st_dir))
+    assert snap() == before
 
 
 def test_priority_sample_state_idempotent_merge(spark, tmp_path):
@@ -1027,11 +1064,8 @@ def test_priority_sample_state_idempotent_merge(spark, tmp_path):
     assert merged_again == merged_once
     # compaction folds to one partition and preserves the sample
     compact_sample_state(spark, state)
-    import os
-
-    assert sorted(
-        d for d in os.listdir(state) if d.startswith("batch=")
-    ) == ["batch=compacted"]
+    parts = [d for d in os.listdir(state) if d.startswith("batch=")]
+    assert parts == ["batch=c0"] == lattice.live_parts(spark, state)
     assert {
         (r.doc_id, r.pri) for r in read_sample_state(spark, state).collect()
     } == merged_once
@@ -1042,7 +1076,8 @@ def test_profile_state_minmax_lattice_idempotence(spark, tmp_path):
     level: the fold of tranche partials equals the one-shot batch
     profile, checkpoint replay (same batch id) and wholesale
     re-delivery (fresh batch id) are both absorbed by the min/max
-    merge, and compaction sweeps to one partition with state intact."""
+    merge, and compaction folds to one committed generation with state
+    intact."""
     import os
 
     from collect_mobile_devices_datalake_spark.streaming.profile_maintenance import (
@@ -1051,7 +1086,6 @@ def test_profile_state_minmax_lattice_idempotence(spark, tmp_path):
         read_profile_state,
         _profile_family,
     )
-    from collect_mobile_devices_datalake_spark.streaming import lattice
 
     sf = "/root/testdata/sf0.001"
     docs = load_table(spark, "documents", sf).select("doc_id", "text", "source")
@@ -1079,7 +1113,7 @@ def test_profile_state_minmax_lattice_idempotence(spark, tmp_path):
     compact_profile_state(spark, st)
     assert snap(read_profile_state(spark, st)) == want
     parts = [d for d in os.listdir(st) if d.startswith("batch=")]
-    assert parts == ["batch=compacted"]
+    assert parts == ["batch=c0"] == lattice.live_parts(spark, st)
 
 
 def test_topk_state_mg_guarantee_under_planted_skew(spark, tmp_path):
@@ -1093,7 +1127,6 @@ def test_topk_state_mg_guarantee_under_planted_skew(spark, tmp_path):
     bounded at <= K_CAND+1 rows per batch."""
     import os
 
-    from collect_mobile_devices_datalake_spark.streaming import lattice
     from collect_mobile_devices_datalake_spark.streaming.topk_maintenance import (
         K_CAND,
         _topk_family,
@@ -1174,14 +1207,13 @@ def test_lshindex_state_equals_batch_index_and_absorbs_redelivery(spark, tmp_pat
     row-for-row the batch bucket_index relation (at the driver fixture
     the adaptive plane count floors to the stream's pinned count), the
     DISTINCT-union merge absorbs both checkpoint replay and wholesale
-    re-delivery, and compaction sweeps to one partition with the index
-    intact."""
+    re-delivery, and compaction folds to one committed generation with
+    the index intact."""
     import os
 
     from collect_mobile_devices_datalake_spark.operators.similarity import (
         bucket_index,
     )
-    from collect_mobile_devices_datalake_spark.streaming import lattice
     from collect_mobile_devices_datalake_spark.streaming.lshindex_maintenance import (
         _lshindex_family,
         compact_lshindex_state,
@@ -1211,4 +1243,4 @@ def test_lshindex_state_equals_batch_index_and_absorbs_redelivery(spark, tmp_pat
     compact_lshindex_state(spark, st)
     assert snap(read_lshindex_state(spark, st)) == want
     parts = [d for d in os.listdir(st) if d.startswith("batch=")]
-    assert parts == ["batch=compacted"]
+    assert parts == ["batch=c0"] == lattice.live_parts(spark, st)
